@@ -5,7 +5,9 @@ Flags map 1:1:
 - ``sources``            positional dirs/.zip/.csv paths
 - ``--exclude-regex``    stem filter (anchored match)
 - ``--pre-load/--post-load`` SQL hook files or dirs
-- ``--combine-tables``   prefix UNION ALL combine
+- ``--combine-tables``   prefix UNION ALL combine; a group combines only
+                         when every member's header equals the first
+                         file's exactly (reference LIKE-first table)
 - ``--disable-unzip/--disable-import/--disable-check`` stage toggles
 - ``--all``              reprocess everything (no idempotency skips)
 - ``--log-level``
@@ -58,14 +60,6 @@ class PipelineConfig:
     # file size. Data with quoted newlines under False mis-splits —
     # this is the caller's assertion, not a sniffed guess.
     csv_multiline: bool = True
-    # Operator override for large-group combines whose LIKE-first
-    # header is unreadable (r13): by default such groups FAIL loudly
-    # (on the >=64-file scan-validation path the first header is the
-    # only drift guard, so combining without it is combining
-    # positionally unverified). True restores warn-and-combine for
-    # sources where the header genuinely cannot be read driver-side
-    # but the operator asserts the group is uniform.
-    combine_allow_unverified: bool = False
 
 
 def parse_args(argv: list[str] | None = None) -> PipelineConfig:
@@ -89,13 +83,6 @@ def parse_args(argv: list[str] | None = None) -> PipelineConfig:
         "--csv-no-multiline",
         dest="csv_multiline",
         action="store_false",
-    )
-    # operator's assertion that an unreadable LIKE-first header group
-    # is uniform (combines positionally unverified, warned)
-    p.add_argument(
-        "--combine-allow-unverified",
-        dest="combine_allow_unverified",
-        action="store_true",
     )
     p.add_argument(
         "--db-protocol", choices=["copy", "jdbc"], default="copy"
@@ -147,5 +134,4 @@ def parse_args(argv: list[str] | None = None) -> PipelineConfig:
         bucket_by=a.bucket_by,
         bucket_count=a.bucket_count,
         csv_multiline=a.csv_multiline,
-        combine_allow_unverified=a.combine_allow_unverified,
     )

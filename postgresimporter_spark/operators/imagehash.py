@@ -128,14 +128,19 @@ def image_phash(media: DataFrame, id_col: str = "path") -> DataFrame:
 
     def _run(batches):
         for pdf in batches:
-            out = []
+            ids, hashes = [], []
             for _, r in pdf.iterrows():
                 try:
                     h = phash(bytes(r["content"]))
                 except Exception:  # noqa: BLE001 - log-and-continue
                     h = None
-                out.append({"id": r[id_col], "phash": h})
-            yield pd.DataFrame(out, columns=["id", "phash"])
+                ids.append(r[id_col])
+                hashes.append(h)
+            # nullable Int64: a None in a plain column makes pandas
+            # fall back to float64, which rounds every 64-bit hash
+            yield pd.DataFrame(
+                {"id": ids, "phash": pd.array(hashes, dtype="Int64")}
+            )
 
     return media.select(id_col, "content").mapInPandas(
         _run, schema=f"id {id_field}, phash long"

@@ -301,11 +301,13 @@ class Loader:
                 df = read_csv_group(
                     self.spark,
                     files,
-                    strict_schema=True,
+                    members=[
+                        result.file_views.get(
+                            import_view_name(file_table_name(f))
+                        )
+                        for f in files
+                    ],
                     multiline=self.config.csv_multiline,
-                    allow_unverified_first=(
-                        self.config.combine_allow_unverified
-                    ),
                 )
                 view = import_view_name(table)
                 df.createOrReplaceTempView(view)
@@ -413,56 +415,16 @@ class Loader:
                 # there) leaves the view out of sink_written, and the
                 # retry below re-writes it from the CSV-backed view.
                 df = csv_df
-                # The parquet fast path applies to SMALL groups only
-                # (r12): every step of it is O(members) DRIVER-side —
-                # measured 66.6ms/member for the per-member footer
-                # open alone, and the unionByName fold builds an
-                # O(members) plan (200 members: fold 9.75s vs 3.09s
-                # for one multi-path scan) — so at combine-at-scale
-                # group sizes it recreates the serial-driver-loop
-                # disease the scan-time header check just removed.
-                # Large groups write from the CSV-backed view instead:
-                # ONE multi-path scan whose enforceSchema=false header
-                # validation runs distributed (read_csv_group's scale
-                # switch), trading the columnar-decode speedup for
-                # correctness-by-construction at exactly the sizes
-                # where a silent permuted member could otherwise slip
-                # through parquet's by-name resolution.
-                from .sources.csv import _DISTRIBUTED_HEADER_MIN
-
-                if (
-                    members
-                    and len(members) < _DISTRIBUTED_HEADER_MIN
-                    and all(m in result.sink_written for m in members)
+                if members and all(
+                    m in result.sink_written for m in members
                 ):
                     try:
-                        parts = [
-                            self.spark.read.parquet(str(cfg.sink_dir / m))
-                            for m in members
-                        ]
-                        cols = csv_df.columns
-                        # LIKE-first strictness on the fast path (r12):
-                        # member parquet columns ARE the file's header
-                        # (per-file views read header=true), so exact
-                        # positional equality re-checks header drift at
-                        # footer cost — without it, by-name resolution
-                        # would silently "fix" a PERMUTED member.
-                        # Redundant defense for small groups (the
-                        # pre-scan driver check already verified the
-                        # CSV headers) but cheap at < 64 members.
-                        for m, p in zip(members, parts):
-                            if p.columns != cols:
-                                raise ValueError(
-                                    f"member {m} columns {p.columns} != "
-                                    f"{cols} (LIKE-first drift; "
-                                    "reference main.py:247)"
-                                )
-                        # one multi-path scan, not an O(members)
-                        # unionByName fold (columns verified equal, so
-                        # positional order is pinned by the select)
-                        df = self.spark.read.parquet(
+                        # read_csv_group checked every member's columns
+                        # against the first's, so the known schema pins
+                        # the column order and skips footer inference
+                        df = self.spark.read.schema(csv_df.schema).parquet(
                             *[str(cfg.sink_dir / m) for m in members]
-                        ).select(*cols)
+                        )
                     except Exception:  # noqa: BLE001
                         log.exception(
                             "combined fast path failed for %s; "

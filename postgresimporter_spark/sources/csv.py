@@ -6,6 +6,11 @@ single distributed scan whose input splits parallelize across executors —
 the Spark-native analog of the reference's one-subprocess-per-file fan-out
 (main.py:491-542), but with no per-file process cost and free column
 pruning/pushdown from Catalyst.
+
+Prefix combine (:func:`read_csv_group`) runs ONE exact header check:
+every member's columns, as Spark already read them for the per-file
+import, must equal the first member's; the group is then one scan with
+that schema.
 """
 
 from __future__ import annotations
@@ -14,6 +19,7 @@ import logging
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 log = logging.getLogger(__name__)
 
@@ -103,8 +109,8 @@ def detect_encoding(
     the file's head sample pass it so each guard chain reads a path
     ONCE — on cluster storage every ``_head_bytes`` fallback is a
     Hadoop FileSystem open+read round-trip, and before this the
-    quoted-newline probe, its encoding detect, and the header check
-    each paid their own (ADVICE r11).
+    quoted-newline probe and its encoding detect each paid their own
+    (ADVICE r11).
     """
     if head is _UNFETCHED:
         head = _head_bytes(path, sample_size, spark)
@@ -211,8 +217,8 @@ def _quoted_newline_in_head(head: bytes, sample_size: int = 1 << 16) -> bool:
 # round-trip — measured 7.1ms/file against a LOCAL FS through the
 # Hadoop gateway, 30-100ms on object stores — so a 100 TB / ~800k-file
 # dump tree would serialize minutes-to-hours of driver I/O before any
-# cluster work starts. Mirrors ``_DISTRIBUTED_HEADER_MIN``; below the
-# threshold the driver loop is cheaper than a job round-trip.
+# cluster work starts. Below the threshold the driver loop is cheaper
+# than a job round-trip.
 _DISTRIBUTED_HEAD_MIN = 64
 
 
@@ -274,10 +280,10 @@ def _head_cache(
     spark: SparkSession, heads: dict[str, bytes | None] | None
 ):
     """Per-path memoized head fetch: every guard that needs a file's
-    head sample (quoted-newline probe, encoding sniff, header check)
-    reads it through this, so each path is opened ONCE per ingest —
+    head sample (quoted-newline probe, encoding sniff) reads it
+    through this, so each path is opened ONCE per ingest —
     on cluster storage each open is a Hadoop FileSystem round-trip,
-    and before r12 the three guards paid up to three each."""
+    and before r12 each guard paid its own."""
     cache = heads if heads is not None else {}
 
     def get(p: str | Path) -> bytes | None:
@@ -295,7 +301,7 @@ def read_csv_all_text(
     encoding: str | None = "auto",
     multiline: bool = True,
     _heads: dict[str, bytes | None] | None = None,
-    _verify_header: list[str] | None = None,
+    schema: StructType | None = None,
 ) -> DataFrame:
     """Read CSV file(s) with the header as column names, all columns
     StringType (``inferSchema`` off is Spark's default — it matches the
@@ -317,16 +323,10 @@ def read_csv_all_text(
     for quoted embedded newlines and a positive raises loudly —
     a mis-asserted dump must fail, never silently shear rows.
 
-    ``_verify_header`` (r12, the large-group path of ``read_csv_group``):
-    the given column names become an explicit all-string schema read
-    with ``enforceSchema=false``, so Spark's CSV source validates
-    EVERY file's header row against those names AT SCAN TIME —
-    executor-side, distributed, zero extra driver IO — and a drifted
-    file fails the job loudly (the same mechanism the streaming ingest
-    uses; Spark compares names case-insensitively under the default
-    ``spark.sql.caseSensitive=false``, marginally laxer than the
-    small-group driver check's exact equality, still strictly stronger
-    than the positional merge both engines would otherwise do)."""
+    ``schema`` (an all-string schema whose names the caller already
+    knows, e.g. :func:`read_csv_group`'s checked first member) skips
+    the header-inference job; each file's header line is skipped, not
+    compared."""
     if isinstance(paths, (str, Path)):
         paths = [paths]
     head_of = _head_cache(spark, _heads)
@@ -379,214 +379,57 @@ def read_csv_all_text(
     )
     if encoding:
         reader = reader.option("encoding", encoding)
-    if _verify_header is not None:
-        from pyspark.sql.types import StringType, StructField, StructType
-
-        reader = reader.schema(
-            StructType(
-                [StructField(c, StringType()) for c in _verify_header]
-            )
-        ).option("enforceSchema", "false")
+    if schema is not None:
+        reader = reader.schema(schema)
     return reader.csv([str(p) for p in paths])
-
-
-# Group size at which the LIKE-first header check moves from the
-# serial driver-side loop (exact equality, pre-scan ValueError) to
-# scan-time validation (enforceSchema=false — distributed, zero extra
-# opens, fails at the action). See read_csv_group's Scale switch note.
-_DISTRIBUTED_HEADER_MIN = 64
 
 
 def read_csv_group(
     spark: SparkSession,
     files: list[Path],
-    strict_schema: bool = True,
+    members: list[DataFrame | None] | None = None,
     multiline: bool = True,
-    allow_unverified_first: bool = False,
 ) -> DataFrame:
     """Read a prefix group of CSVs as ONE scan (the combine operator O1).
 
     The reference combines per-file Postgres tables with
     ``CREATE TABLE ... (LIKE first) INCLUDING ALL`` + ``UNION ALL``
-    (main.py:215-248); schema mismatches fail ("column does not exist",
-    main.py:247). Planning the union as a single multi-path scan instead
-    of N union nodes is our SURVEY §4.2 rewrite: one scan, no union
-    operators in the plan, file-level parallelism for free.
+    over member tables it has already loaded (main.py:215-248). Here
+    ``members`` are those already-read per-file DataFrames, in file
+    order; a member the caller lacks (None, or no list at all) is read
+    with :func:`read_csv_all_text`. Every member's ``.columns`` — the
+    header names Spark read — must equal the first member's exactly,
+    else ``ValueError``. The check is deliberately stricter than the
+    reference: Postgres UNION ALL and Spark's multi-path scan are both
+    positional, so a permuted, renamed or re-cased header would combine
+    misassigned, and a count drift null-pads or truncates silently.
 
-    ``strict_schema`` reproduces the reference's LIKE-first-file check:
-    every file's header must equal the first file's header. The check
-    is deliberately STRICTER than the reference's actual failure mode:
-    Postgres UNION ALL is positional, so the reference silently
-    combines PERMUTED same-count all-text headers misassigned and only
-    errors on a column-count mismatch (main.py:247's "column does not
-    exist" is the commented-out WHERE, not the union). Spark's
-    multi-path scan is positional too — and in PERMISSIVE mode a
-    count drift doesn't even error: measured, a dropped column
-    null-pads and a gained column truncates, both silently. Exact
-    header equality is therefore the only drift guard in the plan, so
-    it must actually run: headers unreadable by local IO (s3://,
-    hdfs://) fall back to a driver-side read through the JVM's Hadoop
-    FileSystem (one ~KB open per file, no Spark jobs), and a file
-    whose header cannot be read either way is WARNED about by name —
-    never silently waved through.
-
-    Scale switch (r12): the driver-side loop is SERIAL — measured
-    7.1ms/file even against a local FS through the Hadoop gateway, so
-    an S3-class 30-100ms open turns a 10,000-file group into minutes
-    of driver time before the scan plans. Groups of
-    ``_DISTRIBUTED_HEADER_MIN``+ files therefore read ONE header (the
-    LIKE-first file, driver-side) and push the per-file comparison
-    into the scan itself via an explicit schema +
-    ``enforceSchema=false`` — executor-side, distributed, zero extra
-    opens; a drifted file fails the ACTION loudly instead of the plan
-    (the reference's UNION ALL also failed at execution,
-    main.py:247). Small groups keep the pre-scan loop and its exact
-    ValueError.
-
-    Unreadable LIKE-first header at scale (r13, VERDICT r12 #3): on
-    the distributed-validation path the first file's header IS the
-    only drift guard — there is no per-file driver loop behind it. An
-    unreadable first header therefore RAISES instead of warning (the
-    pre-r13 behavior combined the whole 64+-file group positionally
-    after one log line — exactly the group size where silent
-    mis-assignment costs the most). ``allow_unverified_first=True`` is
-    the explicit operator override, restoring the warn-and-combine
-    behavior for sources where the header genuinely cannot be read
-    driver-side but the operator asserts the group is uniform.
-    """
+    The group is then planned as a single multi-path scan (SURVEY §4.2:
+    no union operators, file-level parallelism for free) with the first
+    member's schema, so header lines are skipped and no inference job
+    runs. A member Spark cannot read fails the group, as the
+    reference's UNION over a missing member table does."""
     heads: dict[str, bytes | None] = {}
-    head_of = _head_cache(spark, heads)
-    verify: list[str] | None = None
-    if strict_schema and len(files) > 1:
-        first = _header(files[0], spark, head=head_of(files[0]))
-        if len(files) >= _DISTRIBUTED_HEADER_MIN:
-            if first is None:
-                if not allow_unverified_first:
-                    raise ValueError(
-                        f"combine header check impossible for "
-                        f"{len(files)}-file group: LIKE-first header "
-                        f"of {files[0]} unreadable, so drifted headers "
-                        "would combine positionally without error; "
-                        "fix the file or pass "
-                        "allow_unverified_first=True to combine "
-                        "unverified (reference LIKE-first-file "
-                        "semantics, main.py:229)"
-                    )
-                log.warning(
-                    "combine header check skipped for %s: LIKE-first "
-                    "header unreadable; drifted headers in this group "
-                    "would combine positionally without error "
-                    "(allow_unverified_first override set)",
-                    files[0],
-                )
-            else:
-                verify = first
-        else:
-            unverifiable = [files[0]] if first is None else []
-            for f in files[1:]:
-                cols = _header(f, spark, head=head_of(f))
-                if cols is None:
-                    unverifiable.append(f)
-                    continue
-                if first is not None and cols != first:
-                    raise ValueError(
-                        f"schema mismatch combining {f}: {cols} != "
-                        f"{first} (reference LIKE-first-file "
-                        "semantics, main.py:247)"
-                    )
-            for f in unverifiable:
-                log.warning(
-                    "combine header check skipped for %s: header "
-                    "unreadable; a permuted or drifted header in this "
-                    "file would combine positionally without error",
-                    f,
-                )
+    dfs = [
+        df
+        if df is not None
+        else read_csv_all_text(spark, f, multiline=multiline, _heads=heads)
+        for f, df in zip(files, members or [None] * len(files), strict=True)
+    ]
+    first = dfs[0].columns
+    for f, df in zip(files, dfs):
+        if df.columns != first:
+            raise ValueError(
+                f"schema mismatch combining {f}: header {df.columns} != "
+                f"{first} (reference LIKE-first-file semantics, "
+                "main.py:247)"
+            )
     return read_csv_all_text(
         spark,
         files,
         multiline=multiline,
         _heads=heads,
-        _verify_header=verify,
+        schema=dfs[0].schema,
     )
 
 
-def _header(
-    path: str | Path,
-    spark: SparkSession | None = None,
-    head: bytes | None | object = _UNFETCHED,
-) -> list[str] | None:
-    """First-line header from the bounded ~64KB head sample — no Spark
-    job per file (a per-file spark.read just to compare headers
-    serializes N job setups on the driver), and (r12) no IO at all
-    when the caller pre-fetched ``head``. Paths local IO cannot open
-    (s3://, hdfs://, file:/ URIs) read through the JVM's Hadoop
-    FileSystem inside ``_head_bytes`` when a session is provided —
-    still driver-side, one BOUNDED read (an unbounded readLine would
-    buffer a giant single-line file — a binary misnamed .csv — whole
-    into the JVM), so the LIKE-first check holds on cluster storage
-    where 100 TB inputs actually live.
-
-    The sample is decoded with the encoding DETECTED FROM THE SAME
-    BYTES — before r12 the Hadoop-FS branch hardcoded utf-8, so a
-    UTF-16 prefix group whose later files took the remote path
-    produced garbled headers and a spurious schema-mismatch raise
-    (loud false positive; ADVICE r11) — and csv.reader parses the
-    first record (quoted embedded newlines inside the header parse
-    correctly as long as the record completes within the sample). A
-    first record that does NOT complete inside the sample falls back
-    to an unbounded LOCAL read when the path is locally openable (a
-    legitimate >64KB header), else returns None. Returns None only
-    when the header is unreadable every way (callers must treat that
-    as unverified, not as verified)."""
-    import csv as _csv
-    import io
-
-    if head is _UNFETCHED:
-        head = _head_bytes(path, 1 << 16, spark)
-    enc = _encoding_of(head, 1 << 16)
-    if head:
-        try:
-            text = head.decode("utf-8" if enc == "UTF-8" else enc)
-        except UnicodeDecodeError:
-            # the sample boundary can shear a multi-byte sequence; the
-            # header sits at the start, so replacing the torn tail is
-            # safe for first-record parsing
-            text = head.decode(
-                "utf-8" if enc == "UTF-8" else enc, errors="replace"
-            )
-        text = text.lstrip("﻿")
-        # The sample parse is trusted only when the first RECORD
-        # provably completes inside it: either the sample holds the
-        # whole file, or an UNQUOTED newline terminates the record.
-        # "\n" in text alone is not enough (ADVICE r12) — a quoted
-        # header field with an embedded newline whose closing quote
-        # falls past the sample boundary contains newlines yet is
-        # truncated, and csv.reader silently returns the partial
-        # record instead of raising.
-        sample_full = len(head) == (1 << 16)
-        in_q = False
-        complete = not sample_full
-        if not complete:
-            for ch in text:
-                if ch == '"':
-                    in_q = not in_q
-                elif ch == "\n" and not in_q:
-                    complete = True
-                    break
-        if complete:
-            try:
-                return next(_csv.reader(io.StringIO(text)))
-            except StopIteration:
-                return None
-    # first record did not complete inside the sample (or the head was
-    # unreadable): a full LOCAL read stays bounded by the record
-    # itself; remote paths report unverified rather than guess
-    try:
-        with open(
-            path,
-            newline="",
-            encoding="utf-8-sig" if enc == "UTF-8" else enc,
-        ) as fh:
-            return next(_csv.reader(fh))
-    except (OSError, StopIteration, UnicodeDecodeError, ValueError):
-        return None

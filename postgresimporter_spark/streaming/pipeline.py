@@ -59,19 +59,20 @@ def stream_schema_for(spark: SparkSession, seed_file: str) -> StructType:
     the batch path): the stream's schema is its ONLY drift guard for
     the rest of its lifetime, so guessing one silently would let every
     subsequent file combine positionally unverified."""
-    from pyspark.sql.types import StringType, StructField
+    from ..sources.csv import read_csv_all_text
 
-    from ..sources.csv import _head_cache, _header
-
-    cols = _header(seed_file, spark, head=_head_cache(spark, None)(seed_file))
-    if cols is None:
+    try:
+        schema = read_csv_all_text(spark, seed_file).schema
+    except Exception:  # noqa: BLE001 - unreadable and empty seeds both raise
+        schema = StructType()
+    if not schema.fields:
         raise ValueError(
             f"stream schema seed header unreadable: {seed_file}; a "
             "guessed schema would let every later file combine "
             "positionally unverified (reference LIKE-first-file "
             "semantics, main.py:229)"
         )
-    return StructType([StructField(c, StringType()) for c in cols])
+    return schema
 
 
 def stream_csv_ingest(

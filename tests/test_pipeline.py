@@ -787,13 +787,16 @@ def test_combine_schema_drift_all_axes(spark, tmp_path):
 
 def test_combine_header_check_via_hadoop_fs(spark, tmp_path):
     """The LIKE-first header check holds for paths local IO cannot
-    open (r11: on cluster storage — s3://, hdfs:// — the old check
+    open (r11: on cluster storage — s3://, hdfs:// — an old check
     silently skipped itself and a permuted header combined
-    misassigned). file:/ URIs exercise the Hadoop FileSystem fallback
-    end-to-end: open() rejects them, the JVM reads them."""
+    misassigned). The check compares the columns Spark read, so
+    file:/ URIs go through the same Hadoop FileSystem as the scan."""
     import pytest
 
-    from postgresimporter_spark.sources.csv import _header, read_csv_group
+    from postgresimporter_spark.sources.csv import (
+        read_csv_all_text,
+        read_csv_group,
+    )
 
     p1, p2 = tmp_path / "h_1.csv", tmp_path / "h_2.csv"
     p1.write_text("a,b,c\n1,2,3\n")
@@ -801,8 +804,8 @@ def test_combine_header_check_via_hadoop_fs(spark, tmp_path):
     u1, u2 = f"file:{p1}", f"file:{p2}"
     with pytest.raises(OSError):
         open(u1)  # local IO cannot read the URI form
-    assert _header(u1, spark) == ["a", "b", "c"]
-    assert _header(u2, spark) == ["c", "a", "b"]
+    assert read_csv_all_text(spark, u1).columns == ["a", "b", "c"]
+    assert read_csv_all_text(spark, u2).columns == ["c", "a", "b"]
     with pytest.raises(ValueError, match="schema mismatch"):
         read_csv_group(spark, [u1, u2])
     # matching URIs pass the check and read combined
@@ -811,37 +814,40 @@ def test_combine_header_check_via_hadoop_fs(spark, tmp_path):
 
 def test_header_quoted_newline_spanning_sample_boundary(spark, tmp_path):
     """ADVICE r12: a quoted header field with an embedded newline whose
-    closing quote falls PAST the 64KB head sample used to satisfy the
-    old '\\n in text' completeness check — csv.reader silently returned
-    the truncated partial record as a verified header. The check now
-    requires an UNQUOTED record-terminating newline inside the sample;
-    this file has none, so a local path falls back to the unbounded
-    full read and returns the true header."""
-    from postgresimporter_spark.sources.csv import _header
+    closing quote falls PAST the 64KB head sample must still come back
+    whole — a truncated partial record must never pass as the header.
+    Spark parses the whole first record, so the group check sees the
+    true names."""
+    from postgresimporter_spark.sources.csv import (
+        read_csv_all_text,
+        read_csv_group,
+    )
 
     giant = "x" * 40_000 + "\n" + "y" * 40_000  # quote closes past 64KB
     p = tmp_path / "giant_header_1.csv"
     p.write_text(f'"{giant}",second\n1,2\n')
-    got = _header(p, spark)
-    assert got == [giant, "second"]
+    assert read_csv_all_text(spark, p).columns == [giant, "second"]
+    p2 = tmp_path / "giant_header_2.csv"
+    p2.write_text(f'"{giant}",second\n3,4\n')
+    got = read_csv_group(spark, [p, p2])
+    assert got.columns == [giant, "second"]
+    assert sorted(tuple(r) for r in got.collect()) == [("1", "2"), ("3", "4")]
 
-    # control: a quoted newline that COMPLETES inside the sample still
-    # parses from the bounded head (no full-file read needed)
+    # control: a quoted newline that completes early parses the same way
     q = tmp_path / "small_header_1.csv"
     q.write_text('"a\nb",second\n1,2\n')
-    assert _header(q, spark) == ["a\nb", "second"]
+    assert read_csv_all_text(spark, q).columns == ["a\nb", "second"]
 
 
 def test_head_guards_one_read_per_path_and_utf16_remote(
     spark, tmp_path, monkeypatch
 ):
-    """r12 (ADVICE r11): the three head-sampling guards — header
-    check, quoted-newline shear probe, encoding sniff — share ONE head
-    fetch per file (on cluster storage each fetch is a Hadoop
-    FileSystem open+read; before, a combine with multiline=False paid
-    up to three per file), and the Hadoop-FS header fallback decodes
-    with the encoding DETECTED FROM THE SAME BYTES (before: hardcoded
-    utf-8, so UTF-16 remote headers came back garbled and raised a
+    """r12 (ADVICE r11): the head-sampling guards — quoted-newline
+    shear probe, encoding sniff — share ONE head fetch per file, also
+    across a group's member reads and its combined scan (on cluster
+    storage each fetch is a Hadoop FileSystem open+read); and UTF-16
+    headers read through the Hadoop FS come back with their true names
+    (an earlier driver header parser hardcoded utf-8 there and raised a
     spurious mismatch)."""
     import pytest
 
@@ -860,33 +866,32 @@ def test_head_guards_one_read_per_path_and_utf16_remote(
     got = C.read_csv_group(spark, [p1, p2], multiline=False)
     assert got.count() == 2
     assert sorted(calls) == sorted([str(p1), str(p2)])
+    monkeypatch.setattr(C, "_head_bytes", real)
 
-    # UTF-16 (BOM) header through the Hadoop-FS path: true names out
+    # UTF-16 (BOM) headers through the Hadoop-FS path: true names out
     w1, w2 = tmp_path / "w_1.csv", tmp_path / "w_2.csv"
     w1.write_bytes("α,β\n1,2\n".encode("utf-16"))
     w2.write_bytes("β,α\n20,10\n".encode("utf-16"))
     u1, u2 = f"file:{w1}", f"file:{w2}"
     with pytest.raises(OSError):
         open(u1)  # local IO cannot read the URI form
-    assert C._header(u1, spark) == ["α", "β"]
-    assert C._header(u2, spark) == ["β", "α"]
-    # a real drift still raises, now with correctly-decoded names
+    assert C.read_csv_all_text(spark, u1).columns == ["α", "β"]
+    assert C.read_csv_all_text(spark, u2).columns == ["β", "α"]
+    # a real drift still raises, with correctly-decoded names
     with pytest.raises(ValueError, match="schema mismatch"):
         C.read_csv_group(spark, [u1, u2])
 
 
 def test_combine_header_check_distributed_large_group(spark, tmp_path):
-    """r12 scale switch: at _DISTRIBUTED_HEADER_MIN+ files the
-    LIKE-first check moves off the serial driver loop (measured
-    7.1ms/file through the Hadoop gateway — minutes at 10k S3 files)
-    into the scan itself via enforceSchema=false: a drifted file fails
-    the ACTION loudly, executor-side, with no per-file driver opens; a
-    clean group reads identically to the small-group path."""
+    """Large groups (70 files) get the same exact check as small ones:
+    a drifted member — permuted, or differing only in case — fails
+    read_csv_group loudly at plan time, and a clean group reads every
+    row under the first file's names."""
     import pytest
 
     from postgresimporter_spark.sources import csv as C
 
-    n = C._DISTRIBUTED_HEADER_MIN + 6
+    n = 70
     good = tmp_path / "big"
     good.mkdir()
     files = []
@@ -897,34 +902,36 @@ def test_combine_header_check_distributed_large_group(spark, tmp_path):
         f.write_text(f"a,b,c\n{i},2,3\n{i},4,5\n")
         files.append(f)
 
-    calls = []
-    real = C._head_bytes
-    with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(
-            C,
-            "_head_bytes",
-            lambda p, nn, s=None: (calls.append(str(p)) or real(p, nn, s)),
-        )
-        df = C.read_csv_group(spark, files)
-        assert df.columns == ["a", "b", "c"]  # names from LIKE-first
-        assert df.count() == 2 * n
-        # only the LIKE-first header was fetched driver-side
-        assert calls == [str(files[0])]
+    df = C.read_csv_group(spark, files)
+    assert df.columns == ["a", "b", "c"]  # names from LIKE-first
+    assert df.count() == 2 * n
 
-    # drifted member: the check fires at the action, loudly
+    # drifted member: the check fires before any scan, loudly
     files[n // 2].write_text("c,a,b\n30,10,20\n")
-    with pytest.raises(Exception, match="(?i)header|conform"):
-        C.read_csv_group(spark, files).count()
+    with pytest.raises(ValueError, match="schema mismatch.*header"):
+        C.read_csv_group(spark, files)
 
-    # small groups keep the pre-scan exact-equality ValueError
+    # case-only drift is drift too (Spark's own header validation
+    # compares names case-insensitively and would combine it)
+    cased = tmp_path / "cased"
+    cased.mkdir()
+    cfiles = []
+    for i in range(n):
+        f = cased / f"k_{i}.csv"
+        f.write_text(("ID,b" if i == n - 1 else "id,b") + f"\n{i},x\n")
+        cfiles.append(f)
+    with pytest.raises(ValueError, match="schema mismatch.*header"):
+        C.read_csv_group(spark, cfiles)
+
+    # small groups raise the same way
     with pytest.raises(ValueError, match="schema mismatch"):
         C.read_csv_group(spark, [files[0], files[n // 2]])
 
     # end-to-end pipeline parity: a drifted LARGE group must stay
-    # log-and-continue — the sink write fails (logged), the combined
-    # view never lands in sink_written, reconciliation counts it 0
-    # via the db_row_counts fallback, and the gate FAILS loudly while
-    # the run completes (reference: combine failure -> diff reported).
+    # log-and-continue — the combine fails (logged), the combined view
+    # never lands in sink_written, reconciliation counts it 0, and the
+    # gate FAILS loudly while the run completes (reference: combine
+    # failure -> diff reported).
     sink = tmp_path / "sink"
     r = run_pipeline(
         spark,
@@ -940,17 +947,17 @@ def test_combine_header_check_distributed_large_group(spark, tmp_path):
 
 
 def test_combine_utf16_large_group_scan_validation(spark, tmp_path):
-    """r13 probe pin: the >=64-file scan-time header validation and the
-    encoding sniff compose — a UTF-16 prefix group combines with true
-    column names and values, and a drifted UTF-16 member still fails
-    the action loudly."""
+    """r13 probe pin: the header check and the encoding sniff compose
+    at large group sizes — a 66-file UTF-16 prefix group combines with
+    true column names and values, and a drifted UTF-16 member still
+    fails loudly."""
     import codecs
 
     import pytest
 
     from postgresimporter_spark.sources import csv as C
 
-    n = C._DISTRIBUTED_HEADER_MIN + 2
+    n = 66
     d = tmp_path / "u16grp"
     d.mkdir()
     for i in range(n):
@@ -960,55 +967,49 @@ def test_combine_utf16_large_group_scan_validation(spark, tmp_path):
     files = sorted(d.glob("*.csv"))
     df = C.read_csv_group(spark, files)
     assert df.columns == ["a", "b"]
-    assert df.count() == n
+    assert sorted(int(r.a) for r in df.collect()) == list(range(n))
     (d / f"u_{n // 2:03d}.csv").write_bytes(
         codecs.BOM_UTF16_LE + "b,a\nx,0\n".encode("utf-16-le")
     )
-    with pytest.raises(Exception, match="(?i)header|conform|failed_read"):
-        C.read_csv_group(spark, files).count()
+    with pytest.raises(ValueError, match="schema mismatch.*header"):
+        C.read_csv_group(spark, files)
 
 
 def test_combine_unreadable_likefirst_large_group_fails_loudly(
     spark, tmp_path
 ):
-    """r13 (VERDICT r12 #3): on the >=64-file distributed-validation
-    path the LIKE-first header IS the only drift guard, so an
-    unreadable first header must RAISE — the pre-r13 warn-and-combine
-    left exactly the largest groups combining positionally unguarded.
-    The explicit allow_unverified_first override restores the old
-    behavior for operators who assert uniformity."""
+    """r13 (VERDICT r12 #3): a 66-file group whose LIKE-first member
+    Spark cannot read must RAISE, never combine positionally
+    unverified — and so must a group with an unreadable later
+    member (the reference's UNION over a missing member table fails
+    too)."""
     import pytest
 
     from postgresimporter_spark.sources import csv as C
 
-    n = C._DISTRIBUTED_HEADER_MIN + 2
+    n = 66
     d = tmp_path / "biggrp"
     d.mkdir()
     bad = d / "t_000.csv"
-    bad.mkdir()  # a directory: header unreadable both locally and via FS
+    bad.mkdir()  # a directory: no header Spark can read
     files = [bad]
     for i in range(1, n):
         f = d / f"t_{i:03d}.csv"
         f.write_text("a,b\n1,2\n")
         files.append(f)
-    with pytest.raises(ValueError, match="LIKE-first header"):
+    with pytest.raises(Exception, match="(?i)infer schema"):
         C.read_csv_group(spark, files)
-    # explicit override: warn-and-combine (empty dir contributes 0 rows)
-    df = C.read_csv_group(spark, files, allow_unverified_first=True)
-    assert df.count() == n - 1
+    with pytest.raises(Exception, match="(?i)infer schema"):
+        C.read_csv_group(spark, [*files[1:], bad])
 
 
 def test_combined_sink_threshold_boundary(spark, tmp_path):
-    """r13 (VERDICT r12 #8): the combined-sink write switches strategy
-    exactly at _DISTRIBUTED_HEADER_MIN members (below: parquet
-    fast path re-reading member tables; at/above: one CSV-backed
-    multi-path scan). Both sides of the boundary must write the SAME
-    combined table for clean groups, and both must stay loud on a
-    drifted member (combine fails, reconciliation reports the diff)."""
-    from postgresimporter_spark.sources.csv import _DISTRIBUTED_HEADER_MIN
-
+    """r13 (VERDICT r12 #8): combined-sink writes of clean 63- and
+    64-member groups (once either side of a since-removed strategy
+    switch) give the same table, and a drifted member stays loud at
+    both sizes (combine fails, reconciliation reports the diff)."""
     combined: dict[int, list] = {}
-    for n in (_DISTRIBUTED_HEADER_MIN - 1, _DISTRIBUTED_HEADER_MIN):
+    for n in (63, 64):
         # distinct table prefix per scenario: each run registers
         # import_<prefix> views in the shared session catalog, and a
         # stale same-named view from an earlier run would satisfy the
@@ -1029,15 +1030,13 @@ def test_combined_sink_threshold_boundary(spark, tmp_path):
         got = spark.read.parquet(str(sink / f"import_c{n}"))
         assert got.columns == ["a", "b"]
         combined[n] = sorted((row.a, row.b) for row in got.collect())
-    # identical combined tables either side of the switch
-    expect_small = [(str(i), "x") for i in range(_DISTRIBUTED_HEADER_MIN - 1)]
-    assert combined[_DISTRIBUTED_HEADER_MIN - 1] == sorted(expect_small)
-    assert combined[_DISTRIBUTED_HEADER_MIN] == sorted(
-        expect_small + [(str(_DISTRIBUTED_HEADER_MIN - 1), "x")]
-    )
+    # identical combined tables at both sizes
+    expect_small = [(str(i), "x") for i in range(63)]
+    assert combined[63] == sorted(expect_small)
+    assert combined[64] == sorted(expect_small + [("63", "x")])
 
-    # drifted member: loud on BOTH sides of the boundary
-    for n in (_DISTRIBUTED_HEADER_MIN - 1, _DISTRIBUTED_HEADER_MIN):
+    # drifted member: loud at both sizes
+    for n in (63, 64):
         src = tmp_path / f"drift_{n}"
         src.mkdir()
         for i in range(n):
@@ -1054,6 +1053,43 @@ def test_combined_sink_threshold_boundary(spark, tmp_path):
         )
         assert f"import_d{n}" not in r.sink_written
         assert not r.check_passed
+
+
+def test_combined_sink_reads_member_parquet_once(
+    spark, tmp_path, monkeypatch
+):
+    """The combined sink write of an N-member group reads its members'
+    parquet with ONE DataFrameReader.parquet call under the checked
+    schema — no per-member footer reads."""
+    import pyspark.sql.readwriter as rw
+
+    n = 5
+    src = tmp_path / "src"
+    src.mkdir()
+    for i in range(n):
+        (src / f"pqonce_{i}.csv").write_text(f"a,b\n{i},x\n")
+    sink = tmp_path / "sink"
+    member_dirs = {str(sink / f"import_pqonce_{i}") for i in range(n)}
+    reads: list[tuple] = []
+    orig_read = rw.DataFrameReader.parquet
+
+    def spy(self, *paths, **k):
+        if member_dirs & {str(p) for p in paths}:
+            reads.append(paths)
+        return orig_read(self, *paths, **k)
+
+    monkeypatch.setattr(rw.DataFrameReader, "parquet", spy)
+    r = run_pipeline(
+        spark,
+        PipelineConfig(sources=[src], combine_tables=True, sink_dir=sink),
+    )
+    assert r.check_passed
+    assert "import_pqonce" in r.sink_written
+    assert len(reads) == 1
+    assert {str(p) for p in reads[0]} == member_dirs
+    assert _combined_rows(spark, sink / "import_pqonce") == [
+        (str(i), "x") for i in range(n)
+    ]
 
 
 def test_distributed_zip_extraction_corrupt_and_chunked(spark, tmp_path):
