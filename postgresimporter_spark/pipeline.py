@@ -4,8 +4,9 @@ Stages (reference order preserved):
 
   0. pre-load SQL hooks
   1. unzip archives (idempotent skip unless ``--all``)
-  2. discover CSVs -> exclude-regex -> per-file import views -> install
-     function library -> optional prefix combine
+  2. discover CSVs -> exclude-regex -> per-file import views (planned
+     concurrently, the function library installing meanwhile; views
+     registered in discovery order) -> optional prefix combine
   3. post-load SQL hooks
   4. CSV row counting
   5. count reconciliation report (FATAL log if sum of diffs > tolerance)
@@ -20,6 +21,7 @@ from __future__ import annotations
 
 import logging
 import re
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from pathlib import Path
 
@@ -34,6 +36,11 @@ from .reconcile import reconciliation_report
 from .sources.csv import read_csv_all_text, read_csv_group
 
 log = logging.getLogger(__name__)
+
+# Width of the driver-thread pools that overlap independent Spark jobs
+# (per-file import planning, sink writes, sink counts). Spark's
+# scheduler interleaves the jobs; the width only bounds driver threads.
+DRIVER_POOL_WIDTH = 16
 
 
 @dataclass
@@ -209,8 +216,6 @@ class Loader:
         # sink, which exists only after write_sink.
         csv_counts_async = None
         if not cfg.disable_check and result.table_csv_files:
-            from concurrent.futures import ThreadPoolExecutor
-
             from .reconcile import csv_row_counts
 
             pool = ThreadPoolExecutor(
@@ -225,20 +230,49 @@ class Loader:
         # Only the per-file LOAD is gated — function installation and
         # combine run unconditionally in the reference (main.py:195-213:
         # the disable gate wraps import_data alone).
-        if not cfg.disable_import or cfg.process_all:
-            for f in d.dump_files:
+        #
+        # Each per-file read blocks on its own one-task header-inference
+        # job, so the reads are planned from driver threads (the
+        # reference runs one pgfutter per file, all at once,
+        # main.py:491-542) and the function library installs meanwhile.
+        # Views are registered afterwards on this thread in discovery
+        # order, so file_views order, last-file-wins on colliding names
+        # and log-and-continue are those of a serial loop.
+        files = (
+            d.dump_files if not cfg.disable_import or cfg.process_all else []
+        )
+        with ThreadPoolExecutor(
+            max_workers=DRIVER_POOL_WIDTH, thread_name_prefix="import"
+        ) as pool:
+            futures = [
+                pool.submit(
+                    read_csv_all_text,
+                    self.spark,
+                    f,
+                    multiline=cfg.csv_multiline,
+                )
+                for f in files
+            ]
+            # install packaged function library (main.py:202-208)
+            register_all(self.spark)
+            view_sources: dict[str, Path] = {}
+            for f, fut in zip(files, futures):
                 try:
-                    df = read_csv_all_text(
-                        self.spark, f, multiline=cfg.csv_multiline
-                    )
+                    df = fut.result()
                     view = import_view_name(file_table_name(f))
                     df.createOrReplaceTempView(view)
-                    result.file_views[view] = df
                 except Exception:  # noqa: BLE001
                     log.exception("import failed: %s", f)
-
-        # install packaged function library (main.py:202-208)
-        register_all(self.spark)
+                    continue
+                if view in view_sources:
+                    log.warning(
+                        "view %s: %s replaces %s (file names collide)",
+                        view,
+                        f,
+                        view_sources[view],
+                    )
+                view_sources[view] = f
+                result.file_views[view] = df
 
         # combine (main.py:210-248)
         if cfg.combine_tables:
@@ -342,8 +376,6 @@ class Loader:
             # the cluster 1-task busy per job — concurrency restores
             # ingest parallelism across files, the same effective shape
             # as the reference's per-file pgfutter processes.
-            from concurrent.futures import ThreadPoolExecutor
-
             def _write_one(item):
                 view, df = item
                 try:
@@ -441,7 +473,7 @@ class Loader:
                     )
                     _write_one((view, csv_df))
 
-            with ThreadPoolExecutor(max_workers=16) as pool:
+            with ThreadPoolExecutor(max_workers=DRIVER_POOL_WIDTH) as pool:
                 file_futures = {
                     view: pool.submit(_write_one, (view, df))
                     for view, df in result.file_views.items()

@@ -121,9 +121,17 @@ def db_row_counts(
     sink directories are trusted: a directory left behind by a PREVIOUS
     run must not stand in for a write that failed THIS run — those
     tables fall back to the live view, so a failed write surfaces in
-    the reconciliation diff instead of passing against stale rows."""
-    out = {}
-    for t in tables:
+    the reconciliation diff instead of passing against stale rows.
+
+    The counts are independent jobs, so they run from driver threads
+    and overlap on the scheduler; the dict keeps ``tables`` order. A
+    count that fails is logged and reported as 0, so its difference
+    still shows in the report."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from .pipeline import DRIVER_POOL_WIDTH
+
+    def count(t: str) -> int:
         view = import_view_name(t)
         try:
             trust_sink = (
@@ -132,12 +140,16 @@ def db_row_counts(
                 and (written_views is None or view in written_views)
             )
             if trust_sink:
-                out[t] = spark.read.parquet(str(sink_dir / view)).count()
-            else:
-                out[t] = spark.table(view).count()
-        except Exception:  # noqa: BLE001
-            out[t] = 0
-    return out
+                return spark.read.parquet(str(sink_dir / view)).count()
+            return spark.table(view).count()
+        except Exception as exc:  # noqa: BLE001
+            log.warning("db row count failed for %s, reporting 0: %s", t, exc)
+            return 0
+
+    with ThreadPoolExecutor(
+        max_workers=DRIVER_POOL_WIDTH, thread_name_prefix="db-count"
+    ) as pool:
+        return dict(zip(tables, pool.map(count, tables)))
 
 
 def reconciliation_report(

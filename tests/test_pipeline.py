@@ -273,11 +273,78 @@ def test_disable_import_still_reconciles(spark, animals_dir):
     spark.catalog.dropTempView("import_animals") if any(
         t.name == "import_animals" for t in spark.catalog.listTables()
     ) else None
+    # the function library installs even when the import is disabled
+    spark.sql("DROP TEMPORARY FUNCTION IF EXISTS parse_date")
     cfg = PipelineConfig(sources=[animals_dir], disable_import=True)
     result = run_pipeline(spark, cfg)
     assert result.file_views == {}
     assert result.report is not None  # check stage ran
     assert set(result.table_csv_files) == {"animals"}
+    (d,) = spark.sql("SELECT parse_date('01-JAN-20')").collect()[0]
+    assert str(d) == "2020-01-01"
+
+
+def test_colliding_view_names_last_file_wins(spark, tmp_path, caplog):
+    """a.b.csv and a_b.csv both name import_a_b: the later file in
+    discovery order owns the view (as in a serial import loop, however
+    the concurrent reads finish), and the replacement is logged with
+    both paths."""
+    (tmp_path / "a.b.csv").write_text("v\ndot\n")
+    (tmp_path / "a_b.csv").write_text("v\nunderscore1\nunderscore2\n")
+    with caplog.at_level("WARNING", logger="postgresimporter_spark"):
+        result = run_pipeline(spark, PipelineConfig(sources=[tmp_path]))
+    assert list(result.file_views) == ["import_a_b"]
+    rows = sorted(r.v for r in spark.table("import_a_b").collect())
+    assert rows == ["underscore1", "underscore2"]
+    (msg,) = [m for m in caplog.messages if "collide" in m]
+    assert str(tmp_path / "a.b.csv") in msg
+    assert str(tmp_path / "a_b.csv") in msg
+
+
+def test_concurrent_import_failure_and_order(
+    spark, tmp_path, monkeypatch, caplog
+):
+    """One failing per-file read among five is logged for that file
+    only; the other views keep discovery order even when earlier files
+    finish planning last, and the reconciliation still runs."""
+    import time
+
+    from postgresimporter_spark import pipeline
+
+    names = [f"cimp{i}" for i in range(5)]
+    for n in names:
+        (tmp_path / f"{n}.csv").write_text(f"k\n{n}\n")
+    real = pipeline.read_csv_all_text
+
+    def flaky(spark_, path, **kw):
+        i = names.index(Path(path).stem)
+        if i == 2:
+            raise OSError("unreadable dump")
+        time.sleep(0.1 * (4 - i))  # earlier files finish later
+        return real(spark_, path, **kw)
+
+    monkeypatch.setattr(pipeline, "read_csv_all_text", flaky)
+    with caplog.at_level("ERROR", logger="postgresimporter_spark"):
+        result = run_pipeline(spark, PipelineConfig(sources=[tmp_path]))
+    failed = [m for m in caplog.messages if m.startswith("import failed")]
+    assert failed == [f"import failed: {tmp_path / 'cimp2.csv'}"]
+    assert list(result.file_views) == [
+        "import_cimp0",
+        "import_cimp1",
+        "import_cimp3",
+        "import_cimp4",
+    ]
+    assert result.report is not None
+    report = {
+        r.table: (r.csv_rows, r.db_rows) for r in result.report.collect()
+    }
+    assert report == {
+        "cimp0": (1, 1),
+        "cimp1": (1, 1),
+        "cimp2": (1, 0),
+        "cimp3": (1, 1),
+        "cimp4": (1, 1),
+    }
 
 
 def test_all_overrides_disable_import(spark, animals_dir):
@@ -460,6 +527,19 @@ def test_db_row_counts_ignores_stale_sink(spark, tmp_path):
     )
     assert trusted == {"animals": 10}
     spark.catalog.dropTempView("import_animals")
+
+
+def test_db_row_counts_logs_failed_count(spark, caplog):
+    """A count that raises is reported as 0 (the diff still shows) and
+    logged with the table and the error."""
+    from postgresimporter_spark.reconcile import db_row_counts
+
+    with caplog.at_level("WARNING", logger="postgresimporter_spark"):
+        counts = db_row_counts(spark, ["no_such_table_xyz"])
+    assert counts == {"no_such_table_xyz": 0}
+    (msg,) = [m for m in caplog.messages if "no_such_table_xyz" in m]
+    assert "count failed" in msg
+    assert "import_no_such_table_xyz" in msg  # the exception's text
 
 
 def test_pipeline_records_sink_written(spark, animals_dir, tmp_path):
