@@ -19,6 +19,7 @@ main.py:376-404 semantics), never aborting the whole run.
 
 from __future__ import annotations
 
+import contextlib
 import logging
 import re
 from concurrent.futures import ThreadPoolExecutor
@@ -51,9 +52,9 @@ class LoadResult:
     csv_counts: dict[str, int] = field(default_factory=dict)
     report: DataFrame | None = None
     check_passed: bool = True
-    # Views whose parquet sink write SUCCEEDED this run. Reconciliation
-    # only trusts a sink directory listed here — a directory left by a
-    # previous run must not stand in for rows this run failed to write.
+    # Views whose parquet sink write SUCCEEDED this run; with a parquet
+    # sink, these are the only import views left in the session, each
+    # read from its sink directory.
     sink_written: set[str] = field(default_factory=set)
 
 
@@ -119,58 +120,37 @@ def split_sql_statements(text: str) -> list[str]:
     return [s.strip() for s in stmts if s.strip()]
 
 
-def run_sql_hooks(spark: SparkSession, scripts: list[Path]) -> None:
-    """Execute hook SQL against the session catalog (engine-native mode).
+def run_sql_hooks(spark: SparkSession, scripts: list[Path], db=None) -> None:
+    """Execute hook SQL, psql-style (reference exec.py:97-131).
 
-    Reference exec.py:97-131 pipes scripts through psql; here each
-    statement (quote-aware split) runs through ``spark.sql``. A failing
-    statement is logged and the REST OF THE SCRIPT continues — psql's
-    default behavior, and the reference's log-and-continue semantics."""
+    Each script is split quote- and dollar-aware and its statements run
+    one at a time: through ``spark.sql`` against the session catalog,
+    or, with ``db`` (DbOptions), one Query each on a connection to the
+    sink Postgres. A failing statement is logged and the REST OF THE
+    SCRIPT continues — psql's per-statement autocommit with
+    continue-on-error; an unreadable script or a failed connection is
+    logged and the next script runs."""
     for script in scripts:
         try:
             statements = split_sql_statements(script.read_text())
-        except Exception:  # noqa: BLE001
-            log.exception("hook script unreadable: %s", script)
-            continue
-        for stmt in statements:
-            try:
-                spark.sql(stmt)
-            except Exception:  # noqa: BLE001
-                log.exception(
-                    "hook statement failed (continuing): %s: %.80s",
-                    script,
-                    stmt,
-                )
+            with contextlib.ExitStack() as stack:
+                if db is None:
+                    execute = spark.sql
+                else:
+                    from .sources.pgwire import connect
 
-
-def run_sql_hooks_db(db, scripts: list[Path]) -> None:
-    """Execute hook SQL against the sink Postgres (reference
-    exec.py:97-131 piped scripts through psql). psql's default is
-    per-statement autocommit with continue-on-error; we reproduce that:
-    quote-and-dollar-aware split, one statement per Query, failures
-    logged and the rest of the script continues."""
-    from .sources.pgwire import connect
-
-    for script in scripts:
-        try:
-            statements = split_sql_statements(script.read_text())
-        except Exception:  # noqa: BLE001
-            log.exception("hook script unreadable: %s", script)
-            continue
-        try:
-            with connect(db) as conn:
+                    execute = stack.enter_context(connect(db)).query
                 for stmt in statements:
                     try:
-                        conn.query(stmt)
+                        execute(stmt)
                     except Exception:  # noqa: BLE001
                         log.exception(
-                            "sink hook statement failed (continuing): "
-                            "%s: %.80s",
+                            "hook statement failed (continuing): %s: %.80s",
                             script,
                             stmt,
                         )
         except Exception:  # noqa: BLE001
-            log.exception("sink hook connection failed: %s", script)
+            log.exception("hook script failed: %s", script)
 
 
 class Loader:
@@ -187,10 +167,7 @@ class Loader:
         # Step 0: pre-load hooks (main.py:312-329). With a Postgres
         # sink they run against the DB (reference semantics: psql);
         # engine-native runs use spark.sql.
-        if cfg.db is not None:
-            run_sql_hooks_db(cfg.db, _sql_scripts(cfg.pre_load))
-        else:
-            run_sql_hooks(self.spark, _sql_scripts(cfg.pre_load))
+        run_sql_hooks(self.spark, _sql_scripts(cfg.pre_load), cfg.db)
 
         # Step 1: unzip (main.py:331-332). Reference gate:
         # `disable_unzip and not all` — --all overrides the toggle.
@@ -257,12 +234,17 @@ class Loader:
             register_all(self.spark)
             view_sources: dict[str, Path] = {}
             for f, fut in zip(files, futures):
+                view = import_view_name(file_table_name(f))
                 try:
                     df = fut.result()
-                    view = import_view_name(file_table_name(f))
                     df.createOrReplaceTempView(view)
                 except Exception:  # noqa: BLE001
                     log.exception("import failed: %s", f)
+                    # an earlier load's view of this name must not
+                    # stand in for the failed file; one this load
+                    # registered stays (last-file-wins)
+                    if view not in view_sources:
+                        self.spark.catalog.dropTempView(view)
                     continue
                 if view in view_sources:
                     log.warning(
@@ -281,15 +263,13 @@ class Loader:
         # Step 2.5: materialize to the sink BEFORE post-hooks/check —
         # the reference loads into Postgres during import (pgfutter,
         # main.py:491-542), so its post-load hooks and reconciliation
-        # see the data in the DB.
+        # see the data in the DB. A parquet sink re-points each view at
+        # what this run wrote and drops the views that did not land.
         if cfg.db is not None or cfg.sink_dir is not None:
             self.write_sink(result)
 
         # Step 3: post-load hooks (main.py:337-356)
-        if cfg.db is not None:
-            run_sql_hooks_db(cfg.db, _sql_scripts(cfg.post_load))
-        else:
-            run_sql_hooks(self.spark, _sql_scripts(cfg.post_load))
+        run_sql_hooks(self.spark, _sql_scripts(cfg.post_load), cfg.db)
 
         # Steps 4+5: counts + reconciliation (main.py:358-369); with a
         # Postgres sink the DB side counts come from the sink itself.
@@ -299,10 +279,6 @@ class Loader:
                 result.table_csv_files,
                 tolerance=cfg.check_tolerance,
                 db=cfg.db,
-                sink_dir=cfg.sink_dir,
-                written_views=(
-                    result.sink_written if cfg.sink_dir is not None else None
-                ),
                 csv_counts=(
                     csv_counts_async.result()
                     if csv_counts_async is not None
@@ -348,6 +324,8 @@ class Loader:
                 result.combined_views[view] = df
             except Exception:  # noqa: BLE001
                 log.exception("combine failed for table %s", table)
+                # an earlier load's combined view must not stand in
+                self.spark.catalog.dropTempView(import_view_name(table))
 
     def write_sink(self, result: LoadResult) -> None:
         """Materialize import views to the configured sink.
@@ -376,16 +354,21 @@ class Loader:
             # the cluster 1-task busy per job — concurrency restores
             # ingest parallelism across files, the same effective shape
             # as the reference's per-file pgfutter processes.
-            def _write_one(item):
-                view, df = item
+            #
+            # The sink is the table: once a view's write lands, the view
+            # is re-pointed at what this run wrote (read under its known
+            # schema, so no footer inference), so post-load hooks and
+            # the check read the sink. Done on the writing thread, so
+            # the re-points overlap like the writes do.
+            landed: dict[str, DataFrame] = {}
+
+            def _write_one(view, df):
                 try:
-                    df.write.mode("overwrite").parquet(
-                        str(cfg.sink_dir / view)
-                    )
-                    # Record success so reconciliation only counts sink
-                    # directories THIS run wrote (a stale directory from
-                    # a prior run must not mask a failed write).
-                    result.sink_written.add(view)
+                    path = str(cfg.sink_dir / view)
+                    df.write.mode("overwrite").parquet(path)
+                    sink_df = self.spark.read.schema(df.schema).parquet(path)
+                    sink_df.createOrReplaceTempView(view)
+                    landed[view] = sink_df
                     # Bucketed CTAS: additionally persist views carrying
                     # all bucket columns as bucketed+sorted catalog
                     # tables, so downstream joins/aggs on the key are
@@ -415,17 +398,14 @@ class Loader:
             # combined prefix views as soon as THEIR members land — a
             # per-view dependency, not a global barrier, so one slow
             # file never stalls an unrelated prefix group's combine.
+            # File tasks never wait on anything, so a combined task
+            # blocking on its members cannot deadlock the pool.
             #
-            # A combined view is the UNION ALL of its member file
-            # views (strict LIKE-first schema), so when every member's
-            # parquet just landed, the combined sink is written FROM
-            # those parquet files — columnar decode instead of a
-            # second full CSV parse of the same bytes (measured -38%
-            # on the sf1 ingest spine). Any member missing (its write
-            # failed) falls back to the CSV-backed view, so output
-            # content never depends on the fast path. File tasks never
-            # wait on anything, so a combined task blocking on its
-            # members cannot deadlock the pool.
+            # A combined view is the UNION ALL of its member tables
+            # (strict LIKE-first schema), written from their parquet in
+            # one scan under the checked schema. A member that did not
+            # land fails the combine, as the reference's UNION over a
+            # missing member table does (main.py:228-236).
             def _write_combined(view, csv_df):
                 table = view.removeprefix("import_")
                 members = [
@@ -433,49 +413,28 @@ class Loader:
                     for f in result.table_csv_files.get(table, [])
                 ]
                 for m in members:
-                    fut = file_futures.get(m)
-                    if fut is not None:
-                        fut.result()
-                # The fast path may only ever trade speed: a member
-                # parquet that fails to read back (corrupt or partially-
-                # committed dir, transient FS error, analysis error)
-                # falls back to the CSV-backed df instead of propagating
-                # through fut.result() and aborting the whole write_sink
-                # — the log-and-continue contract (reference
-                # main.py:376-404). Plan-time failures are caught here;
-                # an action-time failure inside _write_one (swallowed
-                # there) leaves the view out of sink_written, and the
-                # retry below re-writes it from the CSV-backed view.
-                df = csv_df
-                if members and all(
-                    m in result.sink_written for m in members
-                ):
-                    try:
-                        # read_csv_group checked every member's columns
-                        # against the first's, so the known schema pins
-                        # the column order and skips footer inference
-                        df = self.spark.read.schema(csv_df.schema).parquet(
-                            *[str(cfg.sink_dir / m) for m in members]
-                        )
-                    except Exception:  # noqa: BLE001
-                        log.exception(
-                            "combined fast path failed for %s; "
-                            "falling back to CSV-backed view",
-                            view,
-                        )
-                        df = csv_df
-                _write_one((view, df))
-                if df is not csv_df and view not in result.sink_written:
-                    log.warning(
-                        "combined fast-path write failed for %s; "
-                        "retrying from CSV-backed view",
-                        view,
+                    if m in file_futures:
+                        file_futures[m].result()
+                missing = [m for m in members if m not in landed]
+                if missing:
+                    log.error(
+                        "combine failed for table %s: %s not written",
+                        table,
+                        ", ".join(missing),
                     )
-                    _write_one((view, csv_df))
+                    return
+                try:
+                    df = self.spark.read.schema(csv_df.schema).parquet(
+                        *[str(cfg.sink_dir / m) for m in members]
+                    )
+                except Exception:  # noqa: BLE001
+                    log.exception("combine failed for table %s", table)
+                    return
+                _write_one(view, df)
 
             with ThreadPoolExecutor(max_workers=DRIVER_POOL_WIDTH) as pool:
                 file_futures = {
-                    view: pool.submit(_write_one, (view, df))
+                    view: pool.submit(_write_one, view, df)
                     for view, df in result.file_views.items()
                 }
                 combined_futures = [
@@ -484,6 +443,16 @@ class Loader:
                 ]
                 for fut in [*file_futures.values(), *combined_futures]:
                     fut.result()
+
+            # A view that did not land leaves the session, so the check
+            # counts it 0 instead of its CSV rows.
+            result.sink_written.update(landed)
+            for views in (result.file_views, result.combined_views):
+                for view in views:
+                    if view in landed:
+                        views[view] = landed[view]
+                    else:
+                        self.spark.catalog.dropTempView(view)
 
 
 def run_pipeline(

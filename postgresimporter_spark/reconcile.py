@@ -4,11 +4,17 @@ The reference compares `wc -l` CSV counts against per-table
 ``SELECT count(*)`` and prints a PrettyTable; FATAL log if the summed
 absolute difference exceeds 100 (hard-coded).
 
-Engine version: counts both sides with Spark (one distributed job per
-side, not one subprocess per file), returns the report as a DataFrame,
-and documents one deliberate deviation: we count *data rows* (the CSV
-parser handles quoted newlines), where `wc -l` counted raw lines
-including the header (FIXTURES.md §5).
+Engine version: counts both sides with Spark (one distributed job for
+the CSV side, not one subprocess per file; one count per import view
+for the table side), returns the report as a DataFrame, and documents
+one deliberate deviation: we count *data rows* (the CSV parser handles
+quoted newlines), where `wc -l` counted raw lines including the header
+(FIXTURES.md §5).
+
+The table side counts whatever ``import_<table>`` names in the session.
+With a parquet sink the pipeline has pointed each view at what this run
+wrote and dropped the views that did not land, so, as in the reference,
+a table the load failed to write counts 0.
 """
 
 from __future__ import annotations
@@ -102,26 +108,10 @@ def csv_row_counts(
     return out
 
 
-def db_row_counts(
-    spark: SparkSession,
-    tables: list[str],
-    sink_dir: Path | None = None,
-    written_views: set[str] | None = None,
-) -> dict[str, int]:
-    """count(*) per import view (O5). Missing views count as 0 — the
-    reference's check tolerates missing tables by reporting the diff.
-
-    With ``sink_dir`` (Spark-native parquet sink), the count comes from
-    the MATERIALIZED sink, not the lazy CSV-backed view — the
-    reference's actual contract (it SELECTed count(*) from the import
-    schema the load had just written, main.py:250-306), and a parquet
-    count is footer metadata instead of a full CSV re-parse.
-
-    ``written_views`` (the pipeline's per-run write record) gates which
-    sink directories are trusted: a directory left behind by a PREVIOUS
-    run must not stand in for a write that failed THIS run — those
-    tables fall back to the live view, so a failed write surfaces in
-    the reconciliation diff instead of passing against stale rows.
+def db_row_counts(spark: SparkSession, tables: list[str]) -> dict[str, int]:
+    """count(*) per import view (O5, reference main.py:250-306). A
+    missing view counts 0 — the reference's check tolerates missing
+    tables by reporting the diff.
 
     The counts are independent jobs, so they run from driver threads
     and overlap on the scheduler; the dict keeps ``tables`` order. A
@@ -132,16 +122,8 @@ def db_row_counts(
     from .pipeline import DRIVER_POOL_WIDTH
 
     def count(t: str) -> int:
-        view = import_view_name(t)
         try:
-            trust_sink = (
-                sink_dir is not None
-                and (sink_dir / view).exists()
-                and (written_views is None or view in written_views)
-            )
-            if trust_sink:
-                return spark.read.parquet(str(sink_dir / view)).count()
-            return spark.table(view).count()
+            return spark.table(import_view_name(t)).count()
         except Exception as exc:  # noqa: BLE001
             log.warning("db row count failed for %s, reporting 0: %s", t, exc)
             return 0
@@ -157,8 +139,6 @@ def reconciliation_report(
     table_csv_files: dict[str, list[Path]],
     tolerance: int = 100,
     db=None,
-    sink_dir: Path | None = None,
-    written_views: set[str] | None = None,
     csv_counts: dict[str, int] | None = None,
 ) -> tuple[DataFrame, bool, dict[str, int]]:
     """Build the reconciliation report (reference report columns,
@@ -177,12 +157,7 @@ def reconciliation_report(
 
         db_counts = table_counts(db, list(table_csv_files))
     else:
-        db_counts = db_row_counts(
-            spark,
-            list(table_csv_files),
-            sink_dir=sink_dir,
-            written_views=written_views,
-        )
+        db_counts = db_row_counts(spark, list(table_csv_files))
 
     rows = [
         Row(
